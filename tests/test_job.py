@@ -166,12 +166,11 @@ def test_grouped_and_partitioned_strategies_agree(spark):
     sorted-stream path must produce identical links on the full sf0.001
     forest — the two implementations share only the pure-Python kernel."""
     from zipkin_dependencies_spark.functions import normalize_spans
-    from zipkin_dependencies_spark.operators.link import links_from_spans
+    from zipkin_dependencies_spark.operators.aggregate import aggregate_links
+    from zipkin_dependencies_spark.operators.link import links_from_spans, trace_links
     from zipkin_dependencies_spark.testdata import derived_spans
 
     norm = normalize_spans(derived_spans(spark, "/root/testdata/sf0.001"))
-    grouped = {tuple(r) for r in links_from_spans(norm, strategy="grouped").collect()}
-    partitioned = {
-        tuple(r) for r in links_from_spans(norm, strategy="partitioned").collect()
-    }
+    grouped = {tuple(r) for r in aggregate_links(trace_links(norm)).collect()}
+    partitioned = {tuple(r) for r in links_from_spans(norm).collect()}
     assert grouped == partitioned and len(grouped) > 0

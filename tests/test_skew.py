@@ -74,12 +74,49 @@ def test_heavy_isolation_matches_default(spark, skewed_spans):
     base = _links(aggregate_links(trace_links_partitioned(skewed_spans)))
     isolated = _links(
         aggregate_links(
-            trace_links_partitioned(
-                skewed_spans, num_partitions=8, isolate_heavy_over=1_000
-            )
+            trace_links_partitioned(skewed_spans, isolate_heavy_over=1_000)
         )
     )
     assert base == isolated
+
+
+def test_heavy_isolation_spreads_light_traces_like_default(spark):
+    """Isolation moves only the heavy traces: light traces must reach as
+    many partitions as without it. Routing light traces by a partition
+    number rendered as a string, then hashing that string again, reached
+    only about 2/3 of the partitions."""
+    from zipkin_dependencies_spark.operators.link import trace_links_partitioned
+    from zipkin_dependencies_spark.schemas import LINK_INPUT_SCHEMA
+
+    rows = [
+        ("t-heavy", None if i == 0 else "r", "r" if i == 0 else f"s{i}",
+         "SERVER" if i == 0 else "CLIENT", "svc-a", None if i == 0 else "svc-b",
+         False, False, 1)
+        for i in range(2_000)
+    ] + [
+        (f"t{i}", None, "r", "SERVER", "svc-light", "gw", False, False, 1)
+        for i in range(2_000)
+    ]
+    spans = spark.createDataFrame(rows, schema=LINK_INPUT_SCHEMA)
+
+    def light_partitions(**kw) -> int:
+        return (
+            trace_links_partitioned(spans, **kw)
+            .filter(F.col("parent") == "gw")
+            .select(F.spark_partition_id())
+            .distinct()
+            .count()
+        )
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        plain = light_partitions()
+        isolated = light_partitions(isolate_heavy_over=500)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert plain == 32
+    assert isolated == plain
 
 
 def test_heavy_trace_at_bench_scale_completes(spark):
@@ -123,32 +160,6 @@ def test_clustered_with_heavy_isolation_raises(spark, skewed_spans):
             skewed_spans, clustered=True, isolate_heavy_over=1_000
         )
 
-
-def test_sampled_heavy_discovery_matches_exact(spark, skewed_spans):
-    """The sampled heavy-key pre-pass (default) and the exact count
-    (heavy_sample_fraction=1.0) must produce identical LINKS — isolation
-    affects placement only, never the result."""
-    from zipkin_dependencies_spark.operators.aggregate import aggregate_links
-    from zipkin_dependencies_spark.operators.link import trace_links_partitioned
-
-    sampled = _links(
-        aggregate_links(
-            trace_links_partitioned(
-                skewed_spans, num_partitions=8, isolate_heavy_over=1_000
-            )
-        )
-    )
-    exact = _links(
-        aggregate_links(
-            trace_links_partitioned(
-                skewed_spans,
-                num_partitions=8,
-                isolate_heavy_over=1_000,
-                heavy_sample_fraction=1.0,
-            )
-        )
-    )
-    assert sampled == exact
 
 def test_two_phase_giant_trace_matches_kernel_and_splits(spark, skewed_spans):
     """SURVEY §4's custom scale piece: a single trace dominating the corpus

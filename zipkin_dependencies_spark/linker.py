@@ -53,6 +53,7 @@ from __future__ import annotations
 
 from collections import deque
 from dataclasses import dataclass, field, replace
+from itertools import repeat
 from typing import Iterable, Optional
 
 VALID_KINDS = frozenset({"CLIENT", "SERVER", "PRODUCER", "CONSUMER"})
@@ -76,6 +77,35 @@ class Span:
     shared: bool = False
     is_error: bool = False
     timestamp: Optional[int] = None     # epoch µs; only day-filter F2 reads it
+
+
+def spans_from_columns(
+    parent_id, id, kind, local_service, remote_service, shared, is_error,
+    timestamp=None,
+) -> list[Span]:
+    """Column-major span fields → one ``Span`` per row.
+
+    Columns may be lists or numpy arrays from an Arrow batch: non-string
+    names (NaN) become None, a null flag is False, a null timestamp is None.
+    ``timestamp=None`` means the column is absent."""
+    if timestamp is None:
+        timestamp = repeat(None)
+    return [
+        Span(
+            parent_id=p if isinstance(p, str) else None,
+            id=i if isinstance(i, str) else None,
+            kind=k if isinstance(k, str) else None,
+            local_service=ls if isinstance(ls, str) else None,
+            remote_service=rs if isinstance(rs, str) else None,
+            shared=bool(sh) if sh is not None and sh == sh else False,
+            is_error=bool(er) if er is not None and er == er else False,
+            timestamp=int(ts) if ts is not None and ts == ts else None,
+        )
+        for p, i, k, ls, rs, sh, er, ts in zip(
+            parent_id, id, kind, local_service, remote_service, shared,
+            is_error, timestamp,
+        )
+    ]
 
 
 @dataclass

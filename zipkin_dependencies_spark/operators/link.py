@@ -1,61 +1,119 @@
 """The per-trace linking operator — the one non-relational kernel (SURVEY §2.6).
 
-Spark mapping (a) from the survey: ``groupBy(trace_key).applyInPandas`` over
-the Arrow channel, executing the pure-Python linker per trace. Each group is
-one trace; output is the per-trace link table, which the global A2 aggregation
-then sums. Map-side cost is bounded: the kernel's output cardinality is
-O(|services|²) per trace, orders of magnitude smaller than its input.
+Production path (``trace_links_partitioned``): repartition by trace_key →
+``sortWithinPartitions`` → one ``mapInPandas`` pass per partition. The
+sorted Arrow stream is cut into trace groups (``sorted_groups``, the MySQL
+``DependencyLinkSpanIterator`` shape) and fed to one ``DependencyLinker``
+per task, which doubles as the map-side combiner; the global A2
+aggregation then sums. The per-trace ``groupBy(trace_key).applyInPandas``
+mapping (``trace_links``) is kept as the reference cross-check.
 
 Scale notes (100 TB):
-- the groupBy(trace_key) shuffle is THE big shuffle of the pipeline; AQE
-  coalesces post-shuffle partitions. Bucketed span storage on trace_key would
-  remove it entirely (G1 parity — see plans/job.py notes).
+- the trace_key repartition is THE big shuffle of the pipeline. Bucketed
+  span storage on trace_key removes it entirely (``clustered=True``, G1
+  parity — see plans/job.py notes).
 - per-trace skew ("Heavy" scenario): one giant trace lands on one task. The
   kernel is O(n) in spans-per-trace with small constants (dict/deque), and
   holds only one trace's 8 narrow columns in memory at once — a 10⁷-span
-  trace is ~1 GB of Python objects, survivable; two-phase subtree linking is
-  the round-2+ hardening for anything beyond that.
+  trace is ~1 GB of Python objects, survivable. ``isolate_heavy_over``
+  places heavy traces alone; ``links_from_spans_two_phase`` splits giant
+  traces across tasks.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Iterable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..linker import DependencyLinker, Span, trace_in_day_window
+from ..linker import DependencyLinker, Span, spans_from_columns, trace_in_day_window
 from ..schemas import TRACE_LINKS_SCHEMA
+
+#: heavy-trace detection scans a seeded sample of this share of the rows
+HEAVY_SAMPLE_FRACTION = 0.05
+HEAVY_SAMPLE_SEED = 11
+
+_SPAN_COLS = (
+    "parent_id", "id", "kind", "local_service", "remote_service", "shared",
+    "is_error", "timestamp",
+)
 
 
 def _rows_to_spans(pdf: pd.DataFrame) -> list[Span]:
-    # itertuples over 8 narrow columns; avoids pandas .apply overhead
-    return [
-        Span(
-            parent_id=p if isinstance(p, str) else None,
-            id=i if isinstance(i, str) else None,
-            kind=k if isinstance(k, str) else None,
-            local_service=ls if isinstance(ls, str) else None,
-            remote_service=rs if isinstance(rs, str) else None,
-            shared=bool(sh) if sh is not None and sh == sh else False,
-            is_error=bool(er) if er is not None and er == er else False,
-            timestamp=int(ts) if ts is not None and ts == ts else None,
-        )
-        for p, i, k, ls, rs, sh, er, ts in zip(
-            pdf["parent_id"].values,
-            pdf["id"].values,
-            pdf["kind"].values,
-            pdf["local_service"].values,
-            pdf["remote_service"].values,
-            pdf["shared"].values,
-            pdf["is_error"].values,
-            pdf["timestamp"].values,
-        )
-    ]
+    return spans_from_columns(*(pdf[c].values for c in _SPAN_COLS))
+
+
+def sorted_groups(
+    batches: Iterable[pd.DataFrame], key_cols: list[str], to_rows
+) -> Iterator[tuple[tuple, list]]:
+    """Cut a key-sorted batch stream into complete groups ``(key, rows)``.
+
+    ``to_rows(pdf)`` converts each batch once into a list of rows, which is
+    sliced per group. A group straddling batch boundaries is carried until
+    its key changes, so only one partial group is ever held. ``key`` is the
+    tuple of the ``key_cols`` values."""
+    import numpy as np
+
+    carry_key: tuple | None = None
+    carry: list = []
+    for pdf in batches:
+        n = len(pdf)
+        if n == 0:
+            continue
+        keys = [pdf[c].to_numpy() for c in key_cols]
+        # boundary where ANY key column changes between adjacent rows
+        changed = keys[0][1:] != keys[0][:-1]
+        for arr in keys[1:]:
+            changed = changed | (arr[1:] != arr[:-1])
+        rows = to_rows(pdf)
+        starts = [0, *(np.flatnonzero(changed) + 1).tolist(), n]
+        for s, e in zip(starts, starts[1:]):
+            key = tuple(arr[s] for arr in keys)
+            # adjacent groups of one batch differ, so only a batch's first
+            # group can continue the carried one
+            if s == 0 and key == carry_key:
+                carry.extend(rows[s:e])
+                continue
+            if carry:
+                yield carry_key, carry
+            carry_key, carry = key, rows[s:e]
+    if carry:
+        yield carry_key, carry
+
+
+def python_stage_partitions(spark: SparkSession) -> int:
+    """Partition count for a repartition feeding a Python stage.
+
+    AQE sizes post-shuffle partitions by BYTES, which under-parallelizes a
+    Python-cost-bound stage (spans are narrow; per-byte cost is high). Floor
+    at the cluster's core count so every core works."""
+    return max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+    )
+
+
+def heavy_keys(df: DataFrame, key_cols: list[str], over: int) -> DataFrame:
+    """Group keys holding more than about ``over`` rows, found from a seeded
+    sample rather than a span-scale ``groupBy().count()``.
+
+    A key with n rows surfaces ~n·f sampled rows, so thresholding at
+    ``over``·f/2 finds every genuinely heavy key with overwhelming
+    probability while scanning only f of the table. Callers use the set for
+    placement only: a missed heavy key still links correctly, just slower."""
+    cutoff = max(1.0, over * HEAVY_SAMPLE_FRACTION / 2.0)
+    return (
+        df.sample(fraction=HEAVY_SAMPLE_FRACTION, seed=HEAVY_SAMPLE_SEED)
+        .groupBy(*key_cols)
+        .count()
+        .filter(F.col("count") > cutoff)
+        .drop("count")
+    )
 
 
 def make_trace_linker(window: tuple[int, int] | None = None):
@@ -92,11 +150,9 @@ def trace_links(normalized_spans: DataFrame, window: tuple[int, int] | None = No
 def trace_links_partitioned(
     normalized_spans: DataFrame,
     window: tuple[int, int] | None = None,
-    num_partitions: int | None = None,
     day_col: str | None = None,
     isolate_heavy_over: int | None = None,
     clustered: bool = False,
-    heavy_sample_fraction: float = 0.05,
 ) -> DataFrame:
     """Scale path: repartition by trace_key + sortWithinPartitions, then one
     mapInPandas pass that walks each partition's sorted stream, cutting trace
@@ -129,23 +185,14 @@ def trace_links_partitioned(
 
     ``isolate_heavy_over=N`` adds skew routing (the reference's Heavy IT
     hazard, SURVEY §4: AQE skew splitting can't apply to stateful Python
-    stages because one trace MUST stay whole): a pre-pass counts spans per
-    trace, and traces above N spans get a dedicated routing key so the hash
-    exchange places each giant trace alone instead of stacking it on top of
-    a normal partition's worth of other traces. Linking a giant trace is
-    still one task — O(n) with small constants — but it no longer makes
-    stragglers of everyone hashed alongside it.
-
-    Heavy discovery is SAMPLED (``heavy_sample_fraction``, seeded): a trace
-    with n spans surfaces ~n·f sampled rows, so thresholding sampled counts
-    at N·f/2 finds every genuinely heavy key with overwhelming probability
-    while scanning only f of the table — at 100 TB the full
-    ``groupBy().count()`` pre-pass would itself be a span-scale aggregation.
-    Mis-detection is safe by construction: a missed heavy trace still links
-    correctly (just co-hashed, slower), a false positive merely routes a
-    light trace alone — the RESULT is placement-independent. Pass
-    ``heavy_sample_fraction=1.0`` to force the exact count (tiny inputs
-    where a sample is noise).
+    stages because one trace MUST stay whole): ``heavy_keys`` finds the
+    traces above N spans from a sample, and each gets a dedicated routing
+    key so the hash exchange places it alone instead of stacking it on top
+    of a normal partition's worth of other traces. Light traces route by
+    their own group key, so they spread exactly as without isolation.
+    Linking a giant trace is still one task — O(n) with small constants —
+    but it no longer makes stragglers of everyone hashed alongside it. The
+    RESULT is placement-independent.
 
     ``isolate_heavy_over`` is incompatible with ``clustered=True``: routing
     requires a repartition, which would silently reintroduce the span-scale
@@ -178,8 +225,6 @@ def trace_links_partitioned(
     )
 
     def link_partition(batches: Iterable[pd.DataFrame]):
-        import numpy as np
-
         from ..worker_logging import init_worker_logging
 
         init_worker_logging()  # executor-side ZIPKIN_LOG_LEVEL bootstrap
@@ -187,49 +232,11 @@ def trace_links_partitioned(
         # one accumulator per (task, day) = the reference's per-task linker
         # (CassandraRowsToDependencyLinks) doubling as the map-side combiner
         linkers: dict = {}
-
-        def flush(gkey: tuple, spans: list[Span]) -> None:
+        for gkey, spans in sorted_groups(batches, group_cols, _rows_to_spans):
             if window is not None and not trace_in_day_window(spans, *window):
-                return
+                continue
             day = gkey[0] if day_col else None
             linkers.setdefault(day, DependencyLinker()).put_trace(spans)
-
-        def group_key_arrays(pdf: pd.DataFrame) -> tuple:
-            return tuple(pdf[c].to_numpy() for c in group_cols)
-
-        carry_key: tuple | None = None
-        carry_spans: list[Span] = []
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            key_arrs = group_key_arrays(pdf)
-            # boundary where ANY key column changes between adjacent rows
-            changed = key_arrs[0][1:] != key_arrs[0][:-1]
-            for arr in key_arrs[1:]:
-                changed = changed | (arr[1:] != arr[:-1])
-            spans_all = _rows_to_spans(pdf)
-            starts = [0, *(np.flatnonzero(changed) + 1).tolist(), n]
-            key_at = lambda i: tuple(arr[i] for arr in key_arrs)  # noqa: E731
-            gi = 0
-            if carry_spans:
-                if carry_key == key_at(0):
-                    carry_spans.extend(spans_all[0 : starts[1]])
-                    if len(starts) == 2:
-                        continue  # whole batch is one group — keep carrying
-                    flush(carry_key, carry_spans)
-                    gi = 1
-                else:
-                    flush(carry_key, carry_spans)
-                carry_spans = []
-                carry_key = None
-            # all groups except the batch's last are complete
-            for i in range(gi, len(starts) - 2):
-                flush(key_at(starts[i]), spans_all[starts[i] : starts[i + 1]])
-            carry_key = key_at(starts[-2])
-            carry_spans = list(spans_all[starts[-2] : starts[-1]])
-        if carry_spans:
-            flush(carry_key, carry_spans)
         rows = [
             (
                 (day, link["parent"], link["child"], link["call_count"], link["error_count"])
@@ -241,65 +248,36 @@ def trace_links_partitioned(
         ]
         yield pd.DataFrame(rows, columns=out_cols)
 
-    # explicit partition count: AQE sizes post-shuffle partitions by BYTES,
-    # which under-parallelizes a Python-cost-bound stage (spans are narrow;
-    # linking cost per byte is high). Floor at the cluster's core count so
-    # every core links; at real scale pass ~2-4× cores for stragglers.
-    if num_partitions is None:
-        num_partitions = max(
-            normalized_spans.sparkSession.sparkContext.defaultParallelism,
-            int(normalized_spans.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
-        )
-    df = normalized_spans
-    if isolate_heavy_over:
-        # identify heavy traces (tiny result: skew means FEW keys); broadcast
-        # the set into a routing column. Light traces route by their group
-        # hash; each heavy trace routes by its own key ⇒ lands alone.
-        if heavy_sample_fraction >= 1.0:
-            counted = df.groupBy(*group_cols).count()
-            cutoff = float(isolate_heavy_over)
-        else:
-            counted = (
-                df.sample(fraction=heavy_sample_fraction, seed=11)
-                .groupBy(*group_cols)
-                .count()
-            )
-            cutoff = max(1.0, isolate_heavy_over * heavy_sample_fraction / 2.0)
-        heavy = (
-            counted.filter(F.col("count") > cutoff)
-            .select(F.concat_ws("|", *group_cols).alias("__gk"))
-        )
-        gk = F.concat_ws("|", *group_cols)
-        df = (
-            df.join(
-                F.broadcast(heavy.withColumn("__heavy", F.lit(True))),
-                gk == F.col("__gk"),
-                "left_outer",
-            )
-            .withColumn(
-                "__route",
-                F.when(F.col("__heavy"), F.concat(F.lit("H:"), gk)).otherwise(
-                    F.pmod(F.hash(gk), F.lit(num_partitions)).cast("string")
-                ),
-            )
-            .drop("__gk", "__heavy")
-        )
-        out = (
-            df.repartition(num_partitions, "__route")
-            .sortWithinPartitions(*order_cols)
-            .drop("__route")
-            .mapInPandas(link_partition, schema=schema)
-        )
-        return out
     if clustered:
         # bucketed input: complete traces per partition by construction;
         # only the in-partition sort (no exchange) remains
-        return df.sortWithinPartitions(*order_cols).mapInPandas(
+        return normalized_spans.sortWithinPartitions(*order_cols).mapInPandas(
             link_partition, schema=schema
         )
+    num_partitions = python_stage_partitions(normalized_spans.sparkSession)
+    if not isolate_heavy_over:
+        return (
+            normalized_spans.repartition(num_partitions, *group_cols)
+            .sortWithinPartitions(*order_cols)
+            .mapInPandas(link_partition, schema=schema)
+        )
+    # the heavy set is tiny (skew means FEW keys): broadcast it into a
+    # routing column. A light trace routes by its group key, a heavy one by
+    # "H:" + key, so each heavy trace hashes apart from the light ones.
+    gk = F.concat_ws("|", *group_cols)
+    heavy = heavy_keys(normalized_spans, group_cols, isolate_heavy_over).select(
+        gk.alias("__gk"), F.lit(True).alias("__heavy")
+    )
     return (
-        df.repartition(num_partitions, *group_cols)
+        normalized_spans.join(F.broadcast(heavy), gk == F.col("__gk"), "left_outer")
+        .withColumn(
+            "__route",
+            F.when(F.col("__heavy"), F.concat(F.lit("H:"), gk)).otherwise(gk),
+        )
+        .drop("__gk", "__heavy")
+        .repartition(num_partitions, "__route")
         .sortWithinPartitions(*order_cols)
+        .drop("__route")
         .mapInPandas(link_partition, schema=schema)
     )
 
@@ -307,40 +285,29 @@ def trace_links_partitioned(
 def links_from_spans(
     normalized_spans: DataFrame,
     window: tuple[int, int] | None = None,
-    strategy: str = "partitioned",
     clustered: bool = False,
     isolate_heavy_over: int | None = None,
-    heavy_sample_fraction: float = 0.05,
 ) -> DataFrame:
-    """Full core: per-trace linking + global A2 reduction.
-
-    strategy='partitioned' (default): sorted-stream partition linking with
-    map-side combine. strategy='grouped': one applyInPandas call per trace —
-    the reference-shaped cross-check path. clustered=True: input is a
-    bucketed span table; skip the grouping shuffle (G1 parity).
+    """Full core: sorted-stream per-trace linking with map-side combine
+    (``trace_links_partitioned``) + global A2 reduction. clustered=True:
+    input is a bucketed span table; skip the grouping shuffle (G1 parity).
     isolate_heavy_over=N: route giant traces to dedicated partitions (skew
     isolation — must never change the result, only the placement)."""
     from .aggregate import aggregate_links
 
-    if strategy == "partitioned":
-        return aggregate_links(
-            trace_links_partitioned(
-                normalized_spans,
-                window,
-                clustered=clustered,
-                isolate_heavy_over=isolate_heavy_over,
-                heavy_sample_fraction=heavy_sample_fraction,
-            )
+    return aggregate_links(
+        trace_links_partitioned(
+            normalized_spans,
+            window,
+            clustered=clustered,
+            isolate_heavy_over=isolate_heavy_over,
         )
-    if strategy == "grouped":
-        return aggregate_links(trace_links(normalized_spans, window))
-    raise ValueError(f"unknown strategy {strategy!r}")
+    )
 
 
 def links_from_spans_two_phase(
     normalized_spans: DataFrame,
     giant_over: int = 100_000,
-    heavy_sample_fraction: float = 0.05,
 ) -> DataFrame:
     """Two-phase linking for GIANT traces (SURVEY §4's one custom scale
     piece; the reference's Heavy IT hazard taken past what isolation fixes,
@@ -368,23 +335,13 @@ def links_from_spans_two_phase(
     kernel contract is pinned by randomized cross-checks in
     tests/test_link_relational.py; the giant split by tests/test_skew.py).
 
-    Giant discovery reuses the sampled detector (seeded; a missed giant
-    still links correctly via the kernel, just slower — placement-only)."""
+    Giant discovery is ``heavy_keys`` (seeded sample; a missed giant still
+    links correctly via the kernel, just slower — placement-only)."""
     from .aggregate import aggregate_links
     from .link_relational import links_from_spans_hybrid
 
     df = normalized_spans
-    if heavy_sample_fraction >= 1.0:
-        counted = df.groupBy("trace_key").count()
-        cutoff = float(giant_over)
-    else:
-        counted = (
-            df.sample(fraction=heavy_sample_fraction, seed=11)
-            .groupBy("trace_key")
-            .count()
-        )
-        cutoff = max(1.0, giant_over * heavy_sample_fraction / 2.0)
-    giants = counted.filter(F.col("count") > cutoff).select("trace_key")
+    giants = heavy_keys(df, ["trace_key"], giant_over)
 
     # key-cardinality driver check (like the reference's isEmpty() actions,
     # F5): on the overwhelmingly common day with NO giant trace, skip the
@@ -400,11 +357,4 @@ def links_from_spans_two_phase(
     )
     giant_links = links_from_spans_hybrid(tagged.filter(F.col("_giant")).drop("_giant"))
     normal_links = links_from_spans(tagged.filter(F.col("_giant").isNull()).drop("_giant"))
-    return (
-        giant_links.unionByName(normal_links)
-        .groupBy("parent", "child")
-        .agg(
-            F.sum("call_count").alias("call_count"),
-            F.sum("error_count").alias("error_count"),
-        )
-    )
+    return aggregate_links(giant_links.unionByName(normal_links))

@@ -429,11 +429,4 @@ def links_from_spans_hybrid(
     slow = aggregate_links(
         trace_links_partitioned(tagged.filter(F.col("_fast").isNull()).drop("_fast"))
     )
-    return (
-        fast.unionByName(slow)
-        .groupBy("parent", "child")
-        .agg(
-            F.sum("call_count").alias("call_count"),
-            F.sum("error_count").alias("error_count"),
-        )
-    )
+    return aggregate_links(fast.unionByName(slow))

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..memo import register_memo
+from .link import python_stage_partitions, sorted_groups
 
 MAX_DEPTH = 127
 
@@ -89,8 +90,8 @@ DEFAULT_STRATEGY = "kernel"
 
 def _make_paths_walker(max_depth: int):
     """mapInPandas kernel: walk each trace's leaf→root chains in plain
-    Python over a trace_key-sorted partition stream (the
-    link_partition carry pattern — traces may straddle Arrow batches).
+    Python over a trace_key-sorted partition stream (traces may straddle
+    Arrow batches; ``sorted_groups`` carries them, as for the linker).
 
     Exact doubling semantics (pinned by tests/test_pipeline_ops.py's
     random forests + the DuckDB recursive-CTE twins): a leaf is a span
@@ -102,14 +103,21 @@ def _make_paths_walker(max_depth: int):
     and fall out of the same bound."""
     bound = max_depth + 1
 
-    def walk_partition(batches):
+    def to_rows(pdf) -> list[tuple]:
         import numpy as np
         import pandas as pd
 
-        out_rows: list[tuple] = []
+        # None (not NaN) for missing parents: object-dtype pandas columns
+        # from Arrow keep None, but be explicit
+        pars = np.where(pd.isna(pdf["parent_id"]), None, pdf["parent_id"])
+        return list(zip(pdf["id"].to_numpy(), pars, pdf["svc"].to_numpy()))
 
-        def flush(trace_key, ids, pars, svcs) -> None:
-            nodes = dict(zip(ids, zip(pars, svcs)))
+    def walk_partition(batches):
+        import pandas as pd
+
+        out_rows: list[tuple] = []
+        for (trace_key,), rows in sorted_groups(batches, ["trace_key"], to_rows):
+            nodes = {i: (p, svc) for i, p, svc in rows}
             parents = {p for p, _ in nodes.values() if p is not None}
             for leaf in nodes:
                 if leaf in parents:
@@ -133,40 +141,6 @@ def _make_paths_walker(max_depth: int):
                 # bound exhausted without termination: cycle or deeper
                 # than max_depth+1 — dropped, exactly like a pointer
                 # that never resolves
-
-        carry_key = None
-        carry: list[tuple] = []  # [(ids, pars, svcs) array slices]
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            tk = pdf["trace_key"].to_numpy()
-            ids = pdf["id"].to_numpy()
-            # None (not NaN) for missing parents: object-dtype pandas
-            # columns from Arrow keep None, but be explicit
-            pars = np.where(pd.isna(pdf["parent_id"]), None, pdf["parent_id"])
-            svcs = pdf["svc"].to_numpy()
-            starts = [0, *(np.flatnonzero(tk[1:] != tk[:-1]) + 1).tolist(), n]
-            gi = 0
-            if carry:
-                if carry_key == tk[0]:
-                    carry.append((ids[: starts[1]], pars[: starts[1]], svcs[: starts[1]]))
-                    if len(starts) == 2:
-                        continue  # whole batch is one trace — keep carrying
-                    _flush_carry(flush, carry_key, carry)
-                    gi = 1
-                else:
-                    _flush_carry(flush, carry_key, carry)
-                carry = []
-                carry_key = None
-            for i in range(gi, len(starts) - 2):
-                s, e = starts[i], starts[i + 1]
-                flush(tk[s], ids[s:e], pars[s:e], svcs[s:e])
-            s, e = starts[-2], starts[-1]
-            carry_key = tk[s]
-            carry = [(ids[s:e], pars[s:e], svcs[s:e])]
-        if carry:
-            _flush_carry(flush, carry_key, carry)
         yield pd.DataFrame(
             out_rows, columns=["trace_key", "leaf_id", "path", "depth"]
         )
@@ -174,36 +148,21 @@ def _make_paths_walker(max_depth: int):
     return walk_partition
 
 
-def _flush_carry(flush, key, chunks) -> None:
-    """Concatenate a trace's cross-batch chunks and flush it."""
-    import numpy as np
-
-    ids = np.concatenate([c[0] for c in chunks])
-    pars = np.concatenate([c[1] for c in chunks])
-    svcs = np.concatenate([c[2] for c in chunks])
-    flush(key, ids, pars, svcs)
-
-
 def _trace_paths_kernel(
     normalized_spans: DataFrame, max_depth: int
 ) -> DataFrame:
     """Kernel-strategy path build: project the 4 consumed columns (the
     mapInPandas boundary is opaque to column pruning — guide §4.1), ONE
-    repartition by trace_key at Python-work-appropriate width (the
-    linker's num_partitions rationale: AQE sizes by bytes, which
-    under-parallelizes a Python-cost-bound stage), in-partition sort for
-    contiguous traces, one Arrow pass."""
-    spark = normalized_spans.sparkSession
+    repartition by trace_key at Python-work-appropriate width
+    (``python_stage_partitions``), in-partition sort for contiguous traces,
+    one Arrow pass."""
     nodes = normalized_spans.select(
         "trace_key",
         "id",
         "parent_id",
         F.coalesce(F.col("local_service"), F.lit("(unknown)")).alias("svc"),
     )
-    n_part = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
+    n_part = python_stage_partitions(normalized_spans.sparkSession)
     return (
         nodes.repartition(n_part, "trace_key")
         .sortWithinPartitions("trace_key")

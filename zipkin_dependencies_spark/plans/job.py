@@ -1,9 +1,10 @@
 """The engine's single query lifecycle (SURVEY §3, "our engine's lifecycle"):
 
 config → SparkSession → source adapter → normalize to the v2 span frame →
-day-filter variant (F1/F2/F3, default F2 parity) → dedupe → groupBy(trace_key)
-→ applyInPandas(linker) → groupBy(parent, child).agg(sum, sum) →
-day-partition overwrite write.
+day-filter variant (F1/F2/F3, default F2 parity) → dedupe → repartition by
+trace_key → sortWithinPartitions → mapInPandas(linker over the sorted trace
+stream) → groupBy(parent, child).agg(sum, sum) → day-partition overwrite
+write.
 
 One Catalyst plan end to end; the only Python hop is the Arrow-vectorized
 linker kernel; control crosses driver→executor at the write action only.
